@@ -428,23 +428,26 @@ class TableStore:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
 
         rel_paths: list[str] = []
-        for dirpath, _dirnames, filenames in os.walk(staging):
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                rel_dir = os.path.relpath(dirpath, staging)
-                rel_dir = "" if rel_dir == "." else rel_dir
-                target_dir = os.path.join(data_dir, rel_dir)
-                os.makedirs(target_dir, exist_ok=True)
-                new_name = f"{write_id}-{fn}"
-                os.rename(
-                    os.path.join(dirpath, fn), os.path.join(target_dir, new_name)
-                )
-                rel_paths.append(os.path.join(rel_dir, new_name) if rel_dir else new_name)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            writer.parquet(staging)
+            for dirpath, _dirnames, filenames in os.walk(staging):
+                for fn in filenames:
+                    if not fn.endswith(".parquet"):
+                        continue
+                    rel_dir = os.path.relpath(dirpath, staging)
+                    rel_dir = "" if rel_dir == "." else rel_dir
+                    target_dir = os.path.join(data_dir, rel_dir)
+                    os.makedirs(target_dir, exist_ok=True)
+                    new_name = f"{write_id}-{fn}"
+                    os.rename(
+                        os.path.join(dirpath, fn), os.path.join(target_dir, new_name)
+                    )
+                    rel_paths.append(os.path.join(rel_dir, new_name) if rel_dir else new_name)
+        finally:
+            # a failed write leaves no staging directory behind
+            shutil.rmtree(staging, ignore_errors=True)
         return rel_paths
 
     @staticmethod

@@ -189,6 +189,29 @@ def test_commit_is_put_if_absent(spark, tmp_path):
         st._commit("db.t", clash)
 
 
+def test_failed_write_removes_its_staging_dir(spark, tmp_path):
+    """A Spark write that raises leaves no _staging-* directory and no
+    new table version behind."""
+    import pytest
+
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame([Row(k="a")]), "db.t")
+    before = st._log_versions("db.t")
+    # A range, not a local relation, so the error comes from the write
+    # tasks rather than from constant folding while planning; and no
+    # partitioning, whose rebalance shuffle would fail before the
+    # write job has created its output directory.
+    failing = spark.range(1).select(
+        F.raise_error(F.lit("injected write failure")).cast("string").alias("k")
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        st.save_overwrite(failing, "db.t")
+    table_dir = st._table_dir("db.t")
+    assert not [d for d in os.listdir(table_dir) if d.startswith("_staging-")]
+    assert st._log_versions("db.t") == before
+    assert [r.k for r in st.read("db.t").collect()] == ["a"]
+
+
 def test_scd1_null_key_not_duplicated(spark, tmp_path):
     """A NULL-keyed source row eqNullSafe-matches a NULL-keyed target
     row: it must UPDATE it, not also insert a duplicate (r2 ADVICE)."""
