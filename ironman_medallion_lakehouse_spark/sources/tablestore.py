@@ -31,6 +31,16 @@ Layout per table::
   unpartitioned table — dims here are small by design).
 - Old versions remain readable (time travel) until `vacuum()`.
 
+**One write-and-commit path.** Every method that writes data
+(save_overwrite, the three MERGEs, delete_where, update_where,
+optimize) ends in ``_write_and_commit``: write the new files, carry the
+kept files and their footer stats forward, commit version + 1 against
+the manifest the method read. That is the table's single commit point
+(``restore``, which writes no data, commits directly). Every scan goes
+through ``_read_file_subset`` under the recorded schema, the three
+MERGEs share one set-up (``_merge_target``, one log replay), and footer
+stats pruning is ``_prune_by_stats``.
+
 Reference behaviors reproduced: 02_bronze.ipynb:300-318 (insert-only),
 04a_gold_dim_athletes.ipynb:309-328 (SCD-1), 02_bronze.ipynb:354
 (OPTIMIZE), 02_bronze.ipynb:279 / spark.catalog.tableExists gating.
@@ -43,6 +53,7 @@ import os
 import re
 import shutil
 import uuid
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -489,41 +500,69 @@ class TableStore:
                 out[rel] = col_stats
         return out
 
+    def _write_and_commit(
+        self,
+        df: DataFrame,
+        name: str,
+        prev: Manifest | None,
+        keep: Sequence[str] = (),
+        schema_json: str | None = None,
+        partition_by: list[str] | None = None,
+        distribute: bool = True,
+    ) -> None:
+        """The write-and-commit path of every data-writing method:
+        write ``df`` as new files, then commit ``prev``'s version + 1
+        (1 for a new table) holding ``keep`` — files of ``prev`` carried
+        forward byte-identical, with their stats — plus the new files
+        and their footer stats. ``schema_json`` and ``partition_by``
+        default to ``prev``'s; ``distribute`` is ``_write_files``'."""
+        if partition_by is None:
+            partition_by = prev.partition_by
+        files = self._write_files(df, name, partition_by, distribute=distribute)
+        stats = {f: prev.stats[f] for f in keep if f in prev.stats}
+        stats.update(self._collect_file_stats(self._data_dir(name), files))
+        self._commit(
+            name,
+            Manifest(
+                version=(prev.version + 1 if prev else 1),
+                schema_json=schema_json or prev.schema_json,
+                partition_by=partition_by,
+                files=list(keep) + files,
+                stats=stats,
+            ),
+            prev=prev,
+        )
+
+    def _require_manifest(self, name: str, version: int | None = None) -> Manifest:
+        """The manifest at ``version`` (default: latest); a missing
+        table or version raises FileNotFoundError."""
+        manifest = (
+            self._manifest_at(name, version) if version is not None else self._latest_manifest(name)
+        )
+        if manifest is None:
+            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        return manifest
+
     # ----------------------------------------------------------------- API
     def table_exists(self, name: str) -> bool:
         """Reference: spark.catalog.tableExists gate (02_bronze.ipynb:279)."""
         return self._latest_manifest(name) is not None
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
-        manifest = (
-            self._manifest_at(name, version) if version is not None else self._latest_manifest(name)
-        )
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        data_dir = self._data_dir(name)
-        if not manifest.files:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(data_dir, f) for f in manifest.files]
-        reader = self.spark.read.schema(schema)
-        if manifest.partition_by:
-            reader = reader.option("basePath", data_dir)
-        # The RECORDED schema is supplied explicitly (never inferred
-        # from footers): files written before a column existed read it
-        # as NULL — schema evolution without mergeSchema's
-        # every-footer scan — and column order / partition-col types
-        # follow the manifest.
-        return reader.parquet(*paths).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
+        manifest = self._require_manifest(name, version)
+        return self._read_file_subset(name, manifest, manifest.files)
 
     def _read_file_subset(
         self, name: str, manifest: Manifest, files: list[str]
     ) -> DataFrame:
-        """Scan exactly ``files`` (rel paths) under ``name``'s recorded
-        schema — the shared reader behind read / read_partitions and the
-        partition-scoped merges. An empty subset is an empty DataFrame,
-        not an empty scan."""
+        """Scan exactly ``files`` (rel paths) under ``manifest``'s
+        recorded schema — the one reader behind every table scan. An
+        empty subset is an empty DataFrame, not an empty scan.
+
+        The RECORDED schema is supplied explicitly (never inferred from
+        footers): files written before a column existed read it as NULL
+        — schema evolution without mergeSchema's every-footer scan — and
+        column order / partition-col types follow the manifest."""
         schema = StructType.fromJson(json.loads(manifest.schema_json))
         if not files:
             return self.spark.createDataFrame([], schema)
@@ -536,21 +575,45 @@ class TableStore:
         )
 
     @staticmethod
+    def _prune_by_stats(
+        manifest: Manifest, column: str | None, lo=None, hi=None
+    ) -> tuple[list[str], list[str]]:
+        """Split the manifest's files into (kept, pruned): a file is
+        pruned only when its recorded footer [min, max] for ``column``
+        cannot intersect [lo, hi] (either bound may be None). Files
+        without stats — and every file when ``column`` is None — are
+        kept. Manifest-only, zero I/O."""
+        kept: list[str] = []
+        pruned: list[str] = []
+        for f in manifest.files:
+            st = manifest.stats.get(f, {}).get(column)
+            out = st is not None and (
+                (lo is not None and st[1] < lo) or (hi is not None and st[0] > hi)
+            )
+            (pruned if out else kept).append(f)
+        return kept, pruned
+
+    @staticmethod
     def _split_files_by_partitions(
-        manifest: Manifest, pvals: list[tuple]
+        manifest: Manifest, pvals: list[tuple], columns: list[str] | None = None
     ) -> tuple[list[str], list[str]]:
         """Split the manifest's files into (touched, untouched) by
-        whether their hive partition-value tuple is in ``pvals`` (tuples
-        ordered as manifest.partition_by). Matching parses the path
-        segments and renders wanted values type-aware, exactly like
-        read_partitions — manifest-level pruning, no scan."""
+        whether their hive partition-value tuple over ``columns``
+        (default: all of manifest.partition_by) is in ``pvals`` —
+        manifest-level pruning, no scan.
+
+        Matching PARSES the dir segments rather than formatting the
+        wanted values: Spark percent-escapes special characters in
+        partition paths ('a b' → 'a%20b') and writes NULL as
+        __HIVE_DEFAULT_PARTITION__, so naive f"{col}={v}" string
+        equality silently misses those partitions. The renderer is
+        type-aware (column dtype from the manifest schema) so float /
+        date / timestamp / decimal keys match Spark's path form too."""
+        columns = columns or manifest.partition_by
         schema = StructType.fromJson(json.loads(manifest.schema_json))
         dtypes = {f.name: f.dataType for f in schema.fields}
         wanted = {
-            tuple(
-                _render_partition_value(v, dtypes.get(c))
-                for c, v in zip(manifest.partition_by, pv)
-            )
+            tuple(_render_partition_value(v, dtypes.get(c)) for c, v in zip(columns, pv))
             for pv in pvals
         }
 
@@ -558,11 +621,11 @@ class TableStore:
             seen: dict[str, str] = {}
             for seg in rel.split(os.sep)[:-1]:
                 parsed = parse_partition_segment(seg)
-                if parsed and parsed[0] in manifest.partition_by:
+                if parsed and parsed[0] in columns:
                     seen[parsed[0]] = (
                         "\0null" if parsed[1] is None else parsed[1]
                     )
-            return tuple(seen.get(c) for c in manifest.partition_by)
+            return tuple(seen.get(c) for c in columns)
 
         touched, untouched = [], []
         for f in manifest.files:
@@ -583,39 +646,15 @@ class TableStore:
         before Spark ever plans the query. Files without recorded
         stats are conservatively kept.
         """
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-
-        def overlaps(rel: str) -> bool:
-            st = manifest.stats.get(rel, {}).get(column)
-            if st is None:
-                return True
-            fmin, fmax = st
-            if lo is not None and fmax < lo:
-                return False
-            if hi is not None and fmin > hi:
-                return False
-            return True
-
-        kept = [f for f in manifest.files if overlaps(f)]
+        manifest = self._require_manifest(name)
+        kept, _pruned = self._prune_by_stats(manifest, column, lo, hi)
         predicate = None
         if lo is not None:
             predicate = F.col(column) >= F.lit(lo)
         if hi is not None:
             p2 = F.col(column) <= F.lit(hi)
             predicate = p2 if predicate is None else (predicate & p2)
-        if not kept:
-            empty = self.spark.createDataFrame([], schema)
-            return empty if predicate is None else empty.filter(predicate)
-        data_dir = self._data_dir(name)
-        reader = self.spark.read
-        if manifest.partition_by:
-            reader = reader.option("basePath", data_dir)
-        df = reader.parquet(*[os.path.join(data_dir, f) for f in kept]).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
+        df = self._read_file_subset(name, manifest, kept)
         return df if predicate is None else df.filter(predicate)
 
     def read_partitions(self, name: str, column: str, values: list) -> DataFrame:
@@ -625,53 +664,20 @@ class TableStore:
         the non-matching files never even enter the scan's file index —
         at 100 TB a 2-of-64-cell IVF probe plans a 1/32-of-corpus read
         before Spark sees a single path."""
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        manifest = self._require_manifest(name)
         if column not in manifest.partition_by:
             raise ValueError(f"{column} is not a partition column of {name}")
-        # Match by PARSING the dir segments rather than formatting the
-        # wanted values: Spark percent-escapes special characters in
-        # partition paths ('a b' → 'a%20b') and writes NULL as
-        # __HIVE_DEFAULT_PARTITION__, so naive f"{col}={v}" string
-        # equality silently misses those partitions. The renderer is
-        # type-aware (column dtype from the manifest schema) so float /
-        # date / timestamp / decimal keys match Spark's path form too.
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        dtype = next((f.dataType for f in schema.fields if f.name == column), None)
-        wanted = {_render_partition_value(v, dtype) for v in values}
-
-        def seg_value(seg: str) -> str | None:
-            parsed = parse_partition_segment(seg)
-            if parsed is None or parsed[0] != column:
-                return None
-            return "\0null" if parsed[1] is None else parsed[1]
-
-        kept = [
-            f
-            for f in manifest.files
-            if any((sv := seg_value(seg)) is not None and sv in wanted
-                   for seg in f.split(os.sep))
-        ]
+        kept, _rest = self._split_files_by_partitions(
+            manifest, [(v,) for v in values], [column]
+        )
         return self._read_file_subset(name, manifest, kept)
 
     def skipped_file_count(self, name: str, column: str, lo=None, hi=None) -> tuple[int, int]:
         """(files_kept, files_total) for a prospective read_where —
         observability hook for tests and planning."""
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        kept = 0
-        for f in manifest.files:
-            st = manifest.stats.get(f, {}).get(column)
-            if st is None:
-                kept += 1
-                continue
-            fmin, fmax = st
-            if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-                continue
-            kept += 1
-        return kept, len(manifest.files)
+        manifest = self._require_manifest(name)
+        kept, _pruned = self._prune_by_stats(manifest, column, lo, hi)
+        return len(kept), len(manifest.files)
 
     # --------------------------------------------------------------- analyze
     #
@@ -687,9 +693,7 @@ class TableStore:
         """Compute and persist table statistics for the CURRENT version;
         returns the stats dict. ``columns`` defaults to every primitive
         (atomic-typed) column."""
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        manifest = self._require_manifest(name)
         schema = StructType.fromJson(json.loads(manifest.schema_json))
         atomic = [
             f.name
@@ -698,7 +702,7 @@ class TableStore:
             not in ("array", "map", "struct", "binary")
         ]
         cols = [c for c in (columns or atomic) if c in atomic]
-        df = self.read(name)
+        df = self._read_file_subset(name, manifest, manifest.files)
         aggs = [F.count(F.lit(1)).alias("_rows")]
         for c in cols:
             aggs.append(F.approx_count_distinct(c).alias(f"_ndv_{c}"))
@@ -733,16 +737,14 @@ class TableStore:
         """Latest recorded statistics at or below the current version,
         with ``stale_versions`` = commits since they were computed (0 =
         exactly current). None if the table was never analyzed."""
-        versions = self._log_versions(name)
-        if not versions:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        latest = self._require_manifest(name).version
         log_dir = self._log_dir(name)
-        for v in reversed(versions):
+        for v in range(latest, 0, -1):
             path = os.path.join(log_dir, f"{v:08d}.analyze.json")
             if os.path.exists(path):
                 with open(path) as fh:
                     stats = json.loads(fh.read())
-                stats["stale_versions"] = versions[-1] - stats["version"]
+                stats["stale_versions"] = latest - stats["version"]
                 return stats
         return None
 
@@ -809,41 +811,41 @@ class TableStore:
         rebalance-hint write distribution shared by every write path;
         clustering supplies its own distribution, so the two are
         mutually exclusive here."""
-        partition_by = partition_by or []
         distribute = bool(optimize_write)
+        if cluster_by or zorder_by:
+            df = self._clustered(df, cluster_by, zorder_by, cluster_files)
+            distribute = False
+        self._write_and_commit(
+            df,
+            name,
+            self._latest_manifest(name),
+            schema_json=df.schema.json(),
+            partition_by=partition_by or [],
+            distribute=distribute,
+        )
+
+    @staticmethod
+    def _clustered(
+        df: DataFrame,
+        cluster_by: list[str] | None,
+        zorder_by: list[str] | None,
+        n: int | None,
+    ) -> DataFrame:
+        """Range-repartition into ``n`` files (default: Spark's choice)
+        and sort within them on ``cluster_by``, or on the interleaved
+        Morton value of ``zorder_by`` — the clustering shared by
+        save_overwrite and optimize."""
         if cluster_by and zorder_by:
             raise ValueError("cluster_by and zorder_by are mutually exclusive")
         if zorder_by:
             from ironman_medallion_lakehouse_spark.operators.zorder import zorder_value
 
-            z = zorder_value(df, zorder_by)
-            df = df.withColumn("_zv", z)
-            df = (
-                df.repartitionByRange(cluster_files, "_zv")
-                if cluster_files
-                else df.repartitionByRange("_zv")
-            ).sortWithinPartitions("_zv").drop("_zv")
-            distribute = False
-        elif cluster_by:
-            df = (
-                df.repartitionByRange(cluster_files, *cluster_by)
-                if cluster_files
-                else df.repartitionByRange(*cluster_by)
-            ).sortWithinPartitions(*cluster_by)
-            distribute = False
-        prev = self._latest_manifest(name)
-        files = self._write_files(df, name, partition_by, distribute=distribute)
-        self._commit(
-            name,
-            Manifest(
-                version=(prev.version + 1 if prev else 1),
-                schema_json=df.schema.json(),
-                partition_by=partition_by,
-                files=files,
-                stats=self._collect_file_stats(self._data_dir(name), files),
-            ),
-            prev=prev,
-        )
+            df = df.withColumn("_zv", zorder_value(df, zorder_by))
+        cols = ["_zv"] if zorder_by else list(cluster_by)
+        df = (
+            df.repartitionByRange(n, *cols) if n else df.repartitionByRange(*cols)
+        ).sortWithinPartitions(*cols)
+        return df.drop("_zv") if zorder_by else df
 
     @staticmethod
     def _evolved_schema(base: StructType, incoming: StructType) -> StructType:
@@ -889,6 +891,67 @@ class TableStore:
             ]
         )
 
+    def _merge_target(
+        self,
+        source: DataFrame,
+        name: str,
+        keys: list[str],
+        partition_by: list[str] | None,
+        merge_schema: bool | None,
+        create: DataFrame | None = None,
+    ) -> tuple[Manifest, StructType, DataFrame, list[str]] | None:
+        """The set-up shared by the three MERGEs, on ONE log replay.
+
+        A missing table is created from ``create`` (default: the
+        source) with ``partition_by`` and None is returned — the merge
+        is done. Otherwise a ``partition_by`` that conflicts with the
+        recorded layout raises; the schema is widened by the source
+        (``merge_schema`` True), checked against it (False) or left to
+        the caller (None); and the target is read. Returns (manifest,
+        merge schema, target, untouched files).
+
+        When every partition column is a merge key, equal keys imply
+        equal partition values, so a source row can only match inside
+        its own partition: the target is then only the partitions the
+        source touches (one distinct-values job over the source), and
+        the other files come back as ``untouched`` — carried forward
+        byte-identical by the commit, never scanned."""
+        manifest = self._latest_manifest(name)
+        if manifest is None:
+            self.save_overwrite(
+                source if create is None else create, name, partition_by=partition_by
+            )
+            return None
+        if partition_by is not None and partition_by != manifest.partition_by:
+            raise ValueError(
+                f"{name} is partitioned by {manifest.partition_by}; "
+                f"cannot merge with partition_by={partition_by}"
+            )
+        schema = StructType.fromJson(json.loads(manifest.schema_json))
+        if merge_schema:
+            schema = self._evolved_schema(schema, source.schema)
+        elif merge_schema is not None:
+            self._reject_extra_columns(source, schema, name)
+        touched, untouched = manifest.files, []
+        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
+            pvals = [
+                tuple(r)
+                for r in source.select(*manifest.partition_by).distinct().collect()
+            ]
+            touched, untouched = self._split_files_by_partitions(manifest, pvals)
+        return manifest, schema, self._read_file_subset(name, manifest, touched), untouched
+
+    @staticmethod
+    def _reject_duplicate_keys(source: DataFrame, keys: list[str], op: str) -> None:
+        """Delta MERGE raises on duplicate source matches; reproduce
+        that contract instead of silently fanning target rows out. One
+        aggregate job over the (small, incremental) source slice."""
+        if source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count():
+            raise ValueError(
+                f"{op} source has duplicate rows per key {keys}; "
+                "deduplicate upstream (Delta MERGE semantics)"
+            )
+
     def merge_insert_only(
         self,
         source: DataFrame,
@@ -922,50 +985,19 @@ class TableStore:
         schema mismatch fails analysis — evolution must be opted into,
         exactly as Delta requires.
         """
-        if not self.table_exists(name):
-            self.save_overwrite(source, name, partition_by=partition_by)
+        prelude = self._merge_target(source, name, keys, partition_by, merge_schema)
+        if prelude is None:
             return
-        manifest = self._latest_manifest(name)
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
-            )
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        if merge_schema:
-            schema = self._evolved_schema(schema, source.schema)
-        else:
-            self._reject_extra_columns(source, schema, name)
-        target = self.read(name)
-        # Pruning is sound only when the partition columns are part of
-        # the merge keys: then equal keys imply equal partition values,
-        # so a source row can only match inside its own partition.
-        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = [
-                tuple(r)
-                for r in source.select(*manifest.partition_by).distinct().collect()
-            ]
-            touched, _untouched = self._split_files_by_partitions(manifest, pvals)
-            target = self._read_file_subset(name, manifest, touched)
+        manifest, schema, target, _untouched = prelude
         src = (
             self._project_to(source, schema)
             if merge_schema
             else source.select(*[f.name for f in schema.fields])
         )
         new_rows = src.join(target.select(*keys), on=keys, how="left_anti")
-        files = self._write_files(new_rows, name, manifest.partition_by)
-        stats = dict(manifest.stats)
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=schema.json(),
-                partition_by=manifest.partition_by,
-                files=manifest.files + files,
-                stats=stats,
-            ),
-            prev=manifest,
+        # append-only: every existing file is carried forward
+        self._write_and_commit(
+            new_rows, name, manifest, keep=manifest.files, schema_json=schema.json()
         )
 
     def merge_scd1(
@@ -1008,30 +1040,10 @@ class TableStore:
         of being clobbered to NULL, Delta's UPDATE SET * + autoMerge
         semantics.
         """
-        if not self.table_exists(name):
-            self.save_overwrite(source, name, partition_by=partition_by)
+        prelude = self._merge_target(source, name, keys, partition_by, merge_schema)
+        if prelude is None:
             return
-        manifest = self._latest_manifest(name)
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
-            )
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        if merge_schema:
-            schema = self._evolved_schema(schema, source.schema)
-        else:
-            self._reject_extra_columns(source, schema, name)
-        untouched: list[str] = []
-        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = [
-                tuple(r)
-                for r in source.select(*manifest.partition_by).distinct().collect()
-            ]
-            touched, untouched = self._split_files_by_partitions(manifest, pvals)
-            target = self._read_file_subset(name, manifest, touched)
-        else:
-            target = self.read(name)
+        manifest, schema, target, untouched = prelude
         if merge_schema:
             target = self._project_to(target, schema)
         cols = [f.name for f in schema.fields]
@@ -1039,18 +1051,7 @@ class TableStore:
         if merge_schema:
             # UPDATE SET assigns only source-carried columns
             update_cols = [c for c in update_cols if c in set(source.columns)]
-
-        # Delta MERGE raises on duplicate source matches; reproduce that
-        # contract instead of silently fanning target rows out. One
-        # aggregate job over the (small, incremental) source slice.
-        dup_keys = (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup_keys:
-            raise ValueError(
-                f"merge_scd1 source has duplicate rows per key {keys}; "
-                "deduplicate upstream (Delta MERGE semantics)"
-            )
+        self._reject_duplicate_keys(source, keys, "merge_scd1")
 
         # Explicit match indicator: keys[0] IS NOT NULL misreads a
         # NULL-keyed source row that eqNullSafe-matched a NULL-keyed
@@ -1081,23 +1082,14 @@ class TableStore:
         inserts = anti_src.join(tgt.select(*keys).alias("t"), match_cond, "left_anti").select(
             *[F.col(f"s.{c}").alias(c) for c in cols]
         )
-        result = merged_existing.unionByName(inserts)
-        files = self._write_files(result, name, manifest.partition_by)
-        # carry untouched partitions' files (and their stats) forward
-        # unchanged; only the rewritten partitions' files are "added"
-        # in the delta entry, so CDC stays O(touched)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
+        # only the rewritten partitions' files are "added" in the delta
+        # entry, so CDC stays O(touched)
+        self._write_and_commit(
+            merged_existing.unionByName(inserts),
             name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=schema.json(),
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
+            manifest,
+            keep=untouched,
+            schema_json=schema.json(),
         )
 
     SCD2_COLS = ("valid_from", "valid_to", "is_current")
@@ -1138,29 +1130,21 @@ class TableStore:
         """
         meta = list(self.SCD2_COLS)
         ts = F.lit(effective_ts).cast("timestamp")
-        if not self.table_exists(name):
-            init = source.withColumn("valid_from", ts).withColumn(
-                "valid_to", F.lit(None).cast("timestamp")
-            ).withColumn("is_current", F.lit(True))
-            self.save_overwrite(init, name, partition_by=partition_by)
-            return
-        manifest = self._latest_manifest(name)
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
+
+        def opened(df: DataFrame) -> DataFrame:
+            return (
+                df.withColumn("valid_from", ts)
+                .withColumn("valid_to", F.lit(None).cast("timestamp"))
+                .withColumn("is_current", F.lit(True))
             )
-        untouched: list[str] = []
-        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = [
-                tuple(r)
-                for r in source.select(*manifest.partition_by).distinct().collect()
-            ]
-            touched, untouched = self._split_files_by_partitions(manifest, pvals)
-            target = self._read_file_subset(name, manifest, touched)
-        else:
-            target = self.read(name)
-        cols = [f.name for f in target.schema.fields]
+
+        prelude = self._merge_target(
+            source, name, keys, partition_by, None, create=opened(source)
+        )
+        if prelude is None:
+            return
+        manifest, schema, target, untouched = prelude
+        cols = [f.name for f in schema.fields]
         missing = [c for c in meta if c not in cols]
         if missing:
             raise ValueError(
@@ -1175,14 +1159,7 @@ class TableStore:
                 f"merge_scd2 source must carry only natural columns; "
                 f"unexpected {src_extra} (SCD-2 metadata is engine-managed)"
             )
-        dup_keys = (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup_keys:
-            raise ValueError(
-                f"merge_scd2 source has duplicate rows per key {keys}; "
-                "deduplicate upstream (Delta MERGE semantics)"
-            )
+        self._reject_duplicate_keys(source, keys, "merge_scd2")
 
         src = source.select(*natural).alias("s")
         # alias AFTER withColumn — withColumn drops a prior alias
@@ -1215,29 +1192,11 @@ class TableStore:
         new_keys = src.join(cur.select(*keys).alias("t"), match_cond, "left_anti").select(
             *[F.col(f"s.{c}").alias(c) for c in natural]
         )
-        openers = (
-            new_changed.unionByName(new_keys)
-            .withColumn("valid_from", ts)
-            .withColumn("valid_to", F.lit(None).cast("timestamp"))
-            .withColumn("is_current", F.lit(True))
-        )
+        openers = opened(new_changed.unionByName(new_keys))
         result = hist.select(*cols).unionByName(
             kept_current.select(*cols)
         ).unionByName(openers.select(*cols))
-        files = self._write_files(result, name, manifest.partition_by)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
+        self._write_and_commit(result, name, manifest, keep=untouched)
 
     # ------------------------------------------------------- predicate DML
     def _touched_files_for(
@@ -1265,21 +1224,9 @@ class TableStore:
            no matching row is carried forward untouched — its bytes are
            never rewritten and it never appears in the change feed.
         """
-        candidates: list[str] = []
-        pruned_out: list[str] = []
-        for f in manifest.files:
-            st = (
-                manifest.stats.get(f, {}).get(prune_column)
-                if prune_column is not None
-                else None
-            )
-            if st is not None and (
-                (prune_lo is not None and st[1] < prune_lo)
-                or (prune_hi is not None and st[0] > prune_hi)
-            ):
-                pruned_out.append(f)
-            else:
-                candidates.append(f)
+        candidates, pruned_out = self._prune_by_stats(
+            manifest, prune_column, prune_lo, prune_hi
+        )
         if not candidates:
             return [], list(manifest.files)
         from urllib.parse import unquote, urlparse
@@ -1327,9 +1274,7 @@ class TableStore:
         Returns metrics ``{"rows_deleted", "files_rewritten",
         "files_total", "version"}`` (numDeletedRows analogue).
         """
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        manifest = self._require_manifest(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
         touched, untouched = self._touched_files_for(
             name, manifest, cond, prune_column, prune_lo, prune_hi
@@ -1348,20 +1293,7 @@ class TableStore:
             F.sum(F.when(cond, 1).otherwise(0)).alias("d"),
         ).collect()[0]
         kept = subset.filter(~F.coalesce(cond, F.lit(False)))
-        files = self._write_files(kept, name, manifest.partition_by)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
+        self._write_and_commit(kept, name, manifest, keep=untouched)
         return {
             "rows_deleted": int(counts["d"] or 0),
             "files_rewritten": len(touched),
@@ -1391,11 +1323,9 @@ class TableStore:
         Returns ``{"rows_updated", "files_rewritten", "files_total",
         "version"}``.
         """
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        manifest = self._require_manifest(name)
         schema = StructType.fromJson(json.loads(manifest.schema_json))
-        known = {f.name: f.dataType for f in schema.fields}
+        known ={f.name: f.dataType for f in schema.fields}
         bad = [c for c in set if c not in known]
         if bad:
             raise ValueError(f"UPDATE SET targets unknown columns {bad} on {name}")
@@ -1427,20 +1357,7 @@ class TableStore:
                 for f in schema.fields
             ]
         )
-        files = self._write_files(rewritten, name, manifest.partition_by)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
+        self._write_and_commit(rewritten, name, manifest, keep=untouched)
         return {
             "rows_updated": n_updated,
             "files_rewritten": len(touched),
@@ -1484,30 +1401,15 @@ class TableStore:
         manifest = self._latest_manifest(name)
         if manifest is None:
             return
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are mutually exclusive")
         if target_partitions is None and not cluster_by and not zorder_by:
             from collections import Counter
 
             per_dir = Counter(os.path.dirname(f) for f in manifest.files)
             if not per_dir or max(per_dir.values()) < min_files:
                 return
-        df = self.read(name)
-        if zorder_by:
-            from ironman_medallion_lakehouse_spark.operators.zorder import zorder_value
-
-            df = df.withColumn("_zv", zorder_value(df, zorder_by))
-            n = target_partitions
-            df = (
-                df.repartitionByRange(n, "_zv") if n else df.repartitionByRange("_zv")
-            ).sortWithinPartitions("_zv").drop("_zv")
-        elif cluster_by:
-            n = target_partitions
-            df = (
-                df.repartitionByRange(n, *cluster_by)
-                if n
-                else df.repartitionByRange(*cluster_by)
-            ).sortWithinPartitions(*cluster_by)
+        df = self._read_file_subset(name, manifest, manifest.files)
+        if cluster_by or zorder_by:
+            df = self._clustered(df, cluster_by, zorder_by, target_partitions)
         elif target_partitions:
             df = df.repartition(target_partitions, *manifest.partition_by) if manifest.partition_by else df.coalesce(target_partitions)
         elif manifest.partition_by:
@@ -1516,18 +1418,7 @@ class TableStore:
             df = df.coalesce(1)
         # every branch above arranged its own distribution — don't
         # re-shuffle in the write layer
-        files = self._write_files(df, name, manifest.partition_by, distribute=False)
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=files,
-                stats=self._collect_file_stats(self._data_dir(name), files),
-            ),
-            prev=manifest,
-        )
+        self._write_and_commit(df, name, manifest, distribute=False)
 
     def vacuum(
         self,
@@ -1547,25 +1438,34 @@ class TableStore:
         stream restarting from an old offset would try to read removed
         files). Callers running streams over this table should pass a
         horizon comfortably beyond their maximum stream downtime, just
-        as with Delta's retention duration."""
+        as with Delta's retention duration.
+
+        With ``retain_hours``, an unreferenced data file younger than
+        the horizon is kept too: it may belong to a write that has
+        renamed its files into data/ but not committed yet (Delta's
+        retention treats uncommitted files the same way). Abandoned
+        ``_staging-*`` directories older than the horizon — left by a
+        killed writer — are removed."""
         manifest = self._latest_manifest(name)
         if manifest is None:
             return 0
         live = set(manifest.files)
         versions = self._log_versions(name)
         keep_after: set[int] = set(versions[-(retain_versions + 1):])
+        horizon = None
         if retain_hours is not None:
             import time
 
             horizon = time.time() - retain_hours * 3600.0
             log_dir = self._log_dir(name)
             for v in versions:
-                entry = os.path.join(log_dir, f"{v:08d}.json")
-                try:
-                    if os.path.getmtime(entry) >= horizon:
-                        keep_after.add(v)
-                except OSError:
+                if self._younger(os.path.join(log_dir, f"{v:08d}.json"), horizon):
                     keep_after.add(v)
+            table_dir = self._table_dir(name)
+            for entry in os.listdir(table_dir):
+                path = os.path.join(table_dir, entry)
+                if entry.startswith("_staging-") and not self._younger(path, horizon):
+                    shutil.rmtree(path, ignore_errors=True)
         for v in keep_after:
             m = self._manifest_at(name, v)
             if m is not None:
@@ -1574,11 +1474,23 @@ class TableStore:
         removed = 0
         for dirpath, _d, filenames in os.walk(data_dir):
             for fn in filenames:
-                rel = os.path.relpath(os.path.join(dirpath, fn), data_dir)
-                if rel not in live:
-                    os.remove(os.path.join(dirpath, fn))
-                    removed += 1
+                path = os.path.join(dirpath, fn)
+                if os.path.relpath(path, data_dir) in live:
+                    continue
+                if horizon is not None and self._younger(path, horizon):
+                    continue
+                os.remove(path)
+                removed += 1
         return removed
+
+    @staticmethod
+    def _younger(path: str, horizon: float) -> bool:
+        """mtime at or after ``horizon``; an unreadable mtime counts as
+        young, so vacuum never deletes on doubt."""
+        try:
+            return os.path.getmtime(path) >= horizon
+        except OSError:
+            return True
 
     def restore(self, name: str, version: int) -> int:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF`` analogue: make
@@ -1644,17 +1556,8 @@ class TableStore:
         )
         if m_from is None or m_to is None:
             raise FileNotFoundError(f"version not found for {name}")
-        added = [f for f in m_to.files if f not in set(m_from.files)]
-        schema = StructType.fromJson(json.loads(m_to.schema_json))
-        if not added:
-            return self.spark.createDataFrame([], schema)
-        data_dir = self._data_dir(name)
-        reader = self.spark.read
-        if m_to.partition_by:
-            reader = reader.option("basePath", data_dir)
-        return reader.parquet(*[os.path.join(data_dir, f) for f in added]).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
+        old = set(m_from.files)
+        return self._read_file_subset(name, m_to, [f for f in m_to.files if f not in old])
 
     def register_views(self, *names: str) -> None:
         """Expose tables as temp views named ``<db>_<table>`` so SQL

@@ -120,5 +120,26 @@ def test_documents_scan_parallelism(spark):
     cap = spark.sparkContext.defaultParallelism
     expect = max(1, min(cap, -(-nrows // _DOCS_ROWS_PER_TASK)))
     assert t["documents"].rdd.getNumPartitions() == expect
-    # the saturation contract: a big-corpus width is the full cap
-    assert max(1, min(cap, -(-(_DOCS_ROWS_PER_TASK * cap * 10) // _DOCS_ROWS_PER_TASK))) == cap
+
+
+def test_adaptive_width_saturates_at_the_cap(tmp_path):
+    """The width comes from the footer row count: a corpus beyond
+    rows_per_task x cap yields the full cap."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ironman_medallion_lakehouse_spark.session import (
+        _DOCS_ROWS_PER_TASK,
+        _adaptive_width,
+    )
+
+    cap = 4
+    rows = _DOCS_ROWS_PER_TASK * cap * 10
+    big = tmp_path / "big.parquet"
+    pq.write_table(pa.table({"doc_id": list(range(rows))}), str(big))
+    assert _adaptive_width(str(big), cap) == cap
+    # below saturation the width is ceil(rows / rows_per_task)
+    small = tmp_path / "small.parquet"
+    n = _DOCS_ROWS_PER_TASK * (cap - 2) + 1
+    pq.write_table(pa.table({"doc_id": list(range(n))}), str(small))
+    assert _adaptive_width(str(small), cap) == cap - 1
