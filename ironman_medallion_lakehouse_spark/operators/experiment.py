@@ -26,6 +26,7 @@ of the per-unit frame regardless of experiment size.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -986,13 +987,15 @@ def srm_check(
     per-variant terms are fixed double expressions rounded into
     DECIMAL(18,9) pre-sum (order-free, engine-exact). Plan: one
     grouped count on |variants| keys, a broadcast join onto the
-    |variants|-row literal frame, scalar output."""
+    |variants|-row literal frame (an Arrow table, so a driver-held
+    ``LocalTableScan`` rather than a Python-worker RDD scan), scalar
+    output."""
     ps = {str(k): float(v) for k, v in expected.items()}
     if abs(sum(ps.values()) - 1.0) > 1e-9:
         raise ValueError(f"expected ratios must sum to 1, got {sum(ps.values())}")
     spark = df.sparkSession
     design = spark.createDataFrame(
-        [(k, v) for k, v in ps.items()], "_g string, _p double"
+        pa.table({"_g": list(ps), "_p": list(ps.values())})
     )
     counts = (
         df.filter(F.col(group_col).cast("string").isin(list(ps)))

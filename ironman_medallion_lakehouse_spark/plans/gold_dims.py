@@ -8,6 +8,7 @@ extractions whose outputs are tiny (→ broadcast on the fact side).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -67,12 +68,18 @@ def build_dim_countries(spark: SparkSession, silver_df: DataFrame) -> DataFrame:
     :130-140) LEFT JOIN the static 92-row code map (J4, :255-266,
     broadcast), fallbacks name=code / continent='Unknown' (:310-322),
     athlete_count = countDistinct(athlete_name) per country (A3/J5,
-    :340-374), country_key = abs(hash(country)) (:324)."""
+    :340-374), country_key = abs(hash(country)) (:324). The map goes in
+    as an Arrow table, so it plans as a ``LocalTableScan`` held in the
+    driver; a Python list would plan ``Scan ExistingRDD`` and fork
+    Python workers to serve 92 rows."""
     countries = (
         silver_df.select("country").filter(F.col("country").isNotNull()).distinct()
     )
     mapping = spark.createDataFrame(
-        COUNTRY_MAPPING, ["country_code", "country_name", "continent"]
+        pa.table(
+            list(zip(*COUNTRY_MAPPING)),
+            names=["country_code", "country_name", "continent"],
+        )
     )
     enriched = (
         countries.alias("c")

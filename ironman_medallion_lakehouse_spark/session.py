@@ -14,16 +14,32 @@ We make those choices explicit so the same code runs correctly on
   and match the DuckDB correctness oracle.
 - Arrow enabled for any pandas-interop path (extension operators use
   ``applyInPandas``/``mapInPandas``; Arrow batching is the fast path).
+- HotSpot's JIT capped at one C1 and one C2 compiler thread
+  (``-XX:CICompilerCount=2``, the tiered minimum; the default is 3 on
+  4 vCPUs and grows with the core count). The pipeline runs as short
+  batch jobs, so the driver JVM is never warm and its compiler threads
+  compete with the tasks for the cores: per-thread ``/proc`` CPU on
+  4 vCPUs put 10.8 of the first dashboard refresh's 19.2 CPU-s and
+  18.9 of an incremental load's 33.6 in the compiler threads (tasks:
+  3.0 and 3.9). With the cap the benchmark's incremental cycle uses
+  17 % less CPU (SCALING.md, "JIT compiler threads"). C2 still compiles
+  every hot method, so peak code quality is kept. The flag goes in
+  ``spark.driver.defaultJavaOptions``, so a caller's
+  ``spark.driver.extraJavaOptions`` still applies, after it.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "ironman-medallion-lakehouse-spark"
+
+# One C1 + one C2 compiler thread (see the module docstring).
+_DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
 
 
 def _default_master() -> str:
@@ -79,6 +95,7 @@ def get_spark(
         # --- local-mode hygiene ---
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JAVA_OPTIONS)
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Local-mode scan parallelism: test-scale parquet files are a few
         # MB, so the 128 MB default split yields 1-3 partitions on 32
@@ -168,13 +185,19 @@ _DOCS_ROWS_PER_TASK = int(os.environ.get("SPARK_GRAFT_DOCS_ROWS_PER_TASK", "64")
 def _adaptive_width(parquet_path: str, cap: int) -> int:
     """Partition width for a row-wise-expensive table: ceil(rows /
     _DOCS_ROWS_PER_TASK) clamped to [1, cap]. Row count comes from the
-    parquet footer (driver-side metadata read, no job); any failure —
-    non-local path, odd layout — falls back to the cap, i.e. the
-    pre-r15 fixed width."""
+    parquet footers (driver-side metadata read, no job) — of the file,
+    or summed over the ``*.parquet`` files under a directory-style
+    table; any failure (non-local path, unreadable footer) falls back
+    to the cap, i.e. the pre-r15 fixed width."""
     try:
         import pyarrow.parquet as pq
 
-        nrows = pq.ParquetFile(parquet_path).metadata.num_rows
+        files = (
+            glob.glob(os.path.join(parquet_path, "**", "*.parquet"), recursive=True)
+            if os.path.isdir(parquet_path)
+            else [parquet_path]
+        )
+        nrows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:  # noqa: BLE001 — sizing hint only, never fatal
         return cap
     return max(1, min(cap, -(-nrows // _DOCS_ROWS_PER_TASK)))

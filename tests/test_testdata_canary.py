@@ -143,3 +143,31 @@ def test_adaptive_width_saturates_at_the_cap(tmp_path):
     n = _DOCS_ROWS_PER_TASK * (cap - 2) + 1
     pq.write_table(pa.table({"doc_id": list(range(n))}), str(small))
     assert _adaptive_width(str(small), cap) == cap - 1
+
+
+def test_adaptive_width_sums_the_footers_of_a_directory_table(tmp_path):
+    """Directory-style parquet (Spark's own output: part files, partition
+    subdirectories, a _SUCCESS marker) is sized by the rows of every
+    ``*.parquet`` footer under it, not by the cap."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ironman_medallion_lakehouse_spark.session import (
+        _DOCS_ROWS_PER_TASK,
+        _adaptive_width,
+    )
+
+    table = tmp_path / "documents.parquet"
+    (table / "lang=en").mkdir(parents=True)
+    (table / "lang=de").mkdir()
+    (table / "_SUCCESS").write_text("")
+    part = pa.table({"doc_id": list(range(_DOCS_ROWS_PER_TASK))})
+    pq.write_table(part, str(table / "lang=en" / "part-0.parquet"))
+    pq.write_table(part, str(table / "lang=en" / "part-1.parquet"))
+    pq.write_table(part.slice(0, 1), str(table / "lang=de" / "part-0.parquet"))
+    # 2 * rows_per_task + 1 rows -> 3 tasks, below a cap of 8
+    assert _adaptive_width(str(table), 8) == 3
+    assert _adaptive_width(str(table), 2) == 2
+    # an unreadable footer falls back to the cap
+    (table / "lang=de" / "part-1.parquet").write_text("not parquet")
+    assert _adaptive_width(str(table), 8) == 8
