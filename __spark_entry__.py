@@ -5,15 +5,36 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-All implementations live in ``ironman_medallion_lakehouse_spark.suite``
-(and the extension modules it imports); this file is a thin adapter.
+The driver verifies only the first 50 names of ``queries()``, so each
+CORRECTNESS file holds at most 50 rows and the suite (120 entries)
+needs several rounds to be covered. This adapter, not the engine
+package, orders the names for that window with one stable sort over
+registration order. An entry's key is
+
+- 0 (urgent) when its newest driver row is red, it never had a driver
+  row, or its current source hash (``_entry_hash``) differs from the one
+  ``SUITE_STATE.json`` recorded at its last green row (a ``null`` hash
+  counts as different; an entry with no record is not "changed");
+- otherwise 1 + the round of its newest (all-green) row, so the oldest
+  attestation comes first and last round's greens come last.
+
+``tools/update_suite_state.py`` writes ``SUITE_STATE.json`` with the
+hash and the reader defined here. All query implementations live in
+``ironman_medallion_lakehouse_spark.suite`` and the modules it imports.
 """
 
 from __future__ import annotations
 
+import hashlib
+import importlib
+import inspect
+import json
 import os
+import re
 import sys
+import types
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,6 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from ironman_medallion_lakehouse_spark import suite  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parent
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,8 +53,217 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return suite.queries()
+    qdict = suite.queries()
+    return {name: qdict[name] for name in _ordered_names()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return suite.oracle_sql()
+    odict = suite.oracle_sql()
+    return {name: odict[name] for name in _ordered_names() if name in odict}
+
+
+# ---------------------------------------------------------------------------
+# driver-window order
+# ---------------------------------------------------------------------------
+
+def _driver_rows(root=ROOT) -> dict[str, tuple[int, bool]]:
+    """name -> (round, all-green) of the entry's newest row across every
+    ``CORRECTNESS_r*.json`` under ``root``; unreadable files are skipped.
+
+    A row is green only when rows, schema and hash all match. A row that
+    is present but FAILED must not count as checked: the r5 verdict
+    showed that doing so rotates a red entry to the tail and ships its
+    fix with no driver row (the q75/q127 failure mode)."""
+    newest: dict[str, tuple[int, bool]] = {}
+    for p in Path(root).glob("CORRECTNESS_r*.json"):
+        m = re.search(r"r(\d+)", p.name)
+        if not m:
+            continue
+        try:
+            data = json.loads(p.read_text())
+        except (OSError, ValueError):
+            continue
+        if not isinstance(data, dict):
+            continue
+        rnd = int(m.group(1))
+        for name, row in data.items():
+            if name not in newest or newest[name][0] < rnd:
+                green = isinstance(row, dict) and bool(
+                    row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+                )
+                newest[name] = (rnd, green)
+    return newest
+
+
+def _suite_state(root=ROOT) -> dict[str, dict]:
+    """name -> ``{"hash", "green_round"}`` record from ``SUITE_STATE.json``
+    (empty when the file is absent or unreadable)."""
+    try:
+        entries = json.loads((Path(root) / "SUITE_STATE.json").read_text()).get(
+            "entries", {}
+        )
+    except (OSError, ValueError):
+        return {}
+    return {n: rec for n, rec in entries.items() if isinstance(rec, dict)}
+
+
+def _window_keys(root=ROOT) -> dict[str, int]:
+    """name -> sort key of the driver-window order (module docstring)."""
+    suite._load_all()
+    rows, state = _driver_rows(root), _suite_state(root)
+    keys = {}
+    for name in suite.QUERIES:
+        rnd, green = rows.get(name, (0, False))
+        rec = state.get(name)
+        urgent = not green or (rec is not None and rec.get("hash") != _entry_hash(name))
+        keys[name] = 0 if urgent else 1 + rnd
+    return keys
+
+
+def _ordered_names(root=ROOT) -> list[str]:
+    keys = _window_keys(root)
+    return sorted(suite.QUERIES, key=keys.__getitem__)
+
+
+def _suite_state_gap(root=ROOT) -> int | None:
+    """How many rounds SUITE_STATE.json lags the newest CORRECTNESS
+    file. ``0`` = the round-start ritual ran for the latest round;
+    ``1`` = the driver wrote a newer CORRECTNESS after the round's
+    window closed (the normal round-boundary state — NOT an error);
+    ``>= 2`` = the ritual was actually forgotten for a full round.
+    ``None`` = no CORRECTNESS file exists (fresh checkout)."""
+    rounds = [rnd for rnd, _ in _driver_rows(root).values()]
+    if not rounds:
+        return None
+    stamped = [
+        rec["green_round"]
+        for rec in _suite_state(root).values()
+        if isinstance(rec.get("green_round"), int)
+    ]
+    # never stamped: the full history is untracked
+    return max(rounds) - max(stamped, default=0)
+
+
+# ---------------------------------------------------------------------------
+# entry source hashes (recorded in SUITE_STATE.json)
+# ---------------------------------------------------------------------------
+
+_ENGINE_PKG_PREFIXES = tuple(
+    f"ironman_medallion_lakehouse_spark.{sub}"
+    for sub in ("operators", "functions", "plans", "sources", "streaming", "session")
+)
+_PKG_PREFIX = "ironman_medallion_lakehouse_spark"
+_MODULE_FILE_HASHES: dict[str, str] = {}
+
+
+def _module_file_hash(mod) -> str | None:
+    """sha256 of a module's source file bytes (memoized per path)."""
+    f = getattr(mod, "__file__", None)
+    if not f:
+        return None
+    h = _MODULE_FILE_HASHES.get(f)
+    if h is None:
+        try:
+            h = hashlib.sha256(Path(f).read_bytes()).hexdigest()
+        except OSError:
+            h = "unreadable"
+        _MODULE_FILE_HASHES[f] = h
+    return h
+
+
+def _transitive_source_parts(fn, depth: int = 3, seen: set | None = None) -> list[str]:
+    """Hash inputs for everything an entry function *reaches*:
+
+    - any referenced ENGINE module (operators/functions/plans/sources/
+      streaming/session — directly, via a module alias like ``dedup as
+      D``, or via a function imported from one) contributes its whole
+      source-file hash, so an operator-body edit mechanically stales
+      every entry that calls it (VERDICT r6 item 6 / ADVICE r6);
+    - any referenced package-local helper OUTSIDE the engine packages
+      (suite-module helpers, shared ``dsum``/``load_tables``-style
+      utilities) contributes its own function source, recursing so a
+      wrapper -> suite-helper -> operator chain is still covered.
+      Function-level (not file-level) hashing here keeps unrelated edits
+      to the large suite modules from staling every entry they contain.
+
+    Name collection walks the function's code object AND every nested
+    code object reachable through ``co_consts`` (lambdas, comprehensions,
+    nested ``def``s), so a helper referenced only inside e.g.
+    ``sorted(xs, key=lambda r: helper(r))`` still stales the entry
+    (ADVICE r7 item 3 — the r6 blind spot stayed partially open for
+    lambda-only references).
+    """
+    if seen is None:
+        seen = set()
+    parts: list[str] = []
+    code = getattr(fn, "__code__", None)
+    glb = getattr(fn, "__globals__", {})
+    if code is None:
+        return parts
+
+    def _all_names(c, acc):
+        acc.update(c.co_names)
+        for const in c.co_consts:
+            if isinstance(const, types.CodeType):
+                _all_names(const, acc)
+        return acc
+
+    for nm in sorted(_all_names(code, set())):
+        if nm.startswith(_PKG_PREFIX):
+            # function-level `from pkg.mod import f` / `import pkg.mod`
+            # compiles the dotted module path itself into co_names
+            mod, modname = sys.modules.get(nm), nm
+            if mod is None:
+                try:
+                    mod = importlib.import_module(nm)
+                except ImportError:
+                    continue
+            obj = mod
+        else:
+            obj = glb.get(nm)
+            if obj is None:
+                continue
+            if isinstance(obj, types.ModuleType):
+                mod, modname = obj, getattr(obj, "__name__", "")
+            else:
+                modname = getattr(obj, "__module__", None) or ""
+                mod = sys.modules.get(modname)
+        if not modname.startswith(_PKG_PREFIX):
+            continue
+        if modname.startswith(_ENGINE_PKG_PREFIXES):
+            if mod is not None:
+                h = _module_file_hash(mod)
+                if h and h not in seen:
+                    seen.add(h)
+                    parts.append(f"{modname}={h}")
+        elif callable(obj) and not isinstance(obj, types.ModuleType):
+            key = f"{modname}.{getattr(obj, '__qualname__', nm)}"
+            if key in seen:
+                continue
+            seen.add(key)
+            try:
+                parts.append(key + ":" + inspect.getsource(obj))
+            except (OSError, TypeError):
+                parts.append(key + ":<nosource>")
+            if depth > 0:
+                parts.extend(_transitive_source_parts(obj, depth - 1, seen))
+    return parts
+
+
+def _entry_hash(name: str) -> str:
+    """Stable content hash of a suite entry: the registered function's
+    source text, its oracle SQL, and — transitively — the source of the
+    engine modules / package-local helpers the function references
+    (``_transitive_source_parts``). An edit to the entry, its oracle,
+    or an operator body it calls changes the hash, and the window order
+    re-verifies the entry the same round. This closes the r6 blind spot
+    where an operator-module edit left the thin wrapper's hash
+    unchanged and relied on a manual docstring-bump convention."""
+    q = suite.QUERIES[name]
+    try:
+        src = inspect.getsource(q.fn)
+    except (OSError, TypeError):
+        src = repr(q.fn)
+    parts = sorted(_transitive_source_parts(q.fn))
+    payload = src + "\x00" + (q.oracle or "") + "\x00" + "\x00".join(parts)
+    return hashlib.sha256(payload.encode("utf-8")).hexdigest()

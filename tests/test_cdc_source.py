@@ -180,3 +180,27 @@ def test_catch_up_reads_each_log_entry_once(spark, tmp_path, monkeypatch):
     parts = reader.partitions({"version": 0}, {"version": 10})
     assert len(parts) >= 10
     assert replays["n"] == 0
+
+
+def test_correctness_gate_runs_q81_from_outside_the_repo(tmp_path):
+    """q81's streaming source runs in a Python data-source worker that
+    imports the package with the driver JVM's environment, which the
+    session's addPyFile does not reach. The correctness tool puts the
+    repo root on that environment's PYTHONPATH, so it passes from any
+    working directory with no PYTHONPATH of the caller's."""
+    import os
+    import subprocess
+    import sys
+
+    from __spark_entry__ import SMOKE_SF_DIR
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2")
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "check_correctness.py"),
+         "--sf", SMOKE_SF_DIR, "q81_cdc_stream"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "PASS q81_cdc_stream" in out.stdout, out.stdout + out.stderr[-2000:]
+    assert out.returncode == 0

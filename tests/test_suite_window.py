@@ -5,17 +5,22 @@
   outside the window.  Rotation: unattested entries sort to the head.
 - VERDICT r5 item 1: a *failing* row counted as "checked", so the red
   entry rotated to the tail and its fix shipped with no driver row.
-  ``_latest_correctness_names`` now returns only all-green names.
+  ``_driver_rows`` marks a row green only when rows, schema and hash
+  all match.
 - VERDICT r5 item 6: an entry whose source changed since its last green
-  row must re-verify the same round.  ``_stale_names`` compares the
+  row must re-verify the same round.  ``_window_keys`` compares the
   entry's current content hash against SUITE_STATE.json (written by
   tools/update_suite_state.py at round start).
 
-These tests pin all three without touching Spark.
+The order lives in the ``__spark_entry__`` driver adapter; the engine's
+own ``suite.queries()`` is registration order and reads no driver file.
+These tests pin all of it without touching Spark.
 """
 
 import json
+import pathlib
 
+import __spark_entry__ as adapter
 from ironman_medallion_lakehouse_spark import suite
 
 
@@ -33,23 +38,39 @@ def _red(**overrides):
     return row
 
 
+def _latest_green(root=adapter.ROOT):
+    """Names with an all-green row in the newest round (``None`` when no
+    CORRECTNESS file exists)."""
+    rows = adapter._driver_rows(root)
+    if not rows:
+        return None
+    latest = max(rnd for rnd, _ in rows.values())
+    return {n for n, (rnd, green) in rows.items() if green and rnd == latest}
+
+
+def _urgent(root=adapter.ROOT):
+    return {n for n, key in adapter._window_keys(root).items() if key == 0}
+
+
 def test_urgent_entries_sort_into_driver_window():
-    """Red-last-round, source-changed, and never-checked entries MUST
-    land inside the driver's 50-row window this round — these are the
-    rows whose absence would ship a fix or a new operator unverified.
-    The green-before backlog may spill past the window in a heavy
-    round (it rotates in next round)."""
-    green = suite._latest_correctness_names()
-    names = suite._ordered_names()
+    """Red, source-changed, and never-checked entries MUST land inside
+    the driver's 50-row window this round — these are the rows whose
+    absence would ship a fix or a new operator unverified. The
+    green-before backlog may spill past the window in a heavy round (it
+    rotates in next round)."""
+    green = _latest_green()
+    names = adapter._ordered_names()
     assert len(names) == len(set(names))
     if not green:
-        return  # fresh checkout: base order, nothing to rotate
-    stale = suite._stale_names()
-    ever = suite._ever_checked_names()
-    latest_any = set(suite._latest_correctness_rows() or {})
-    urgent = [
-        n for n in names if n in stale or n not in ever or n in (latest_any - green)
-    ]
+        return  # fresh checkout: registration order, nothing to rotate
+    rows = adapter._driver_rows()
+    state = adapter._suite_state()
+    stale = {
+        n for n in names if n in state and state[n].get("hash") != adapter._entry_hash(n)
+    }
+    red = {n for n, (_, ok) in rows.items() if not ok}
+    urgent = [n for n in names if n in stale or n not in rows or n in red]
+    assert set(urgent) == _urgent()
     assert len(urgent) <= 50, (
         f"{len(urgent)} urgent entries exceed the driver window — "
         "split the round's changes"
@@ -76,13 +97,13 @@ def test_failed_row_counts_as_unchecked(tmp_path):
     _write_round(tmp_path, 99, rows)
     # record current hashes as "state at green" so staleness doesn't interfere
     state = {
-        "entries": {n: {"hash": suite._entry_hash(n), "green_round": 99} for n in rest}
+        "entries": {n: {"hash": adapter._entry_hash(n), "green_round": 99} for n in rest}
     }
     (tmp_path / "SUITE_STATE.json").write_text(json.dumps(state))
 
-    ordered = suite._ordered_names(tmp_path)
+    ordered = adapter._ordered_names(tmp_path)
     assert ordered[0] == victim, "failing entry must rotate to the head"
-    green = suite._latest_correctness_names(tmp_path)
+    green = _latest_green(tmp_path)
     assert victim not in green
     assert set(rest) == green
 
@@ -93,7 +114,8 @@ def test_rows_only_red_also_unchecked(tmp_path):
     rows = {n: _green() for n in names}
     rows[names[3]] = _red(rows_match=False)
     _write_round(tmp_path, 99, rows)
-    assert names[3] not in suite._latest_correctness_names(tmp_path)
+    assert names[3] not in _latest_green(tmp_path)
+    assert adapter._driver_rows(tmp_path)[names[3]] == (99, False)
 
 
 def test_changed_source_hash_sorts_to_head(tmp_path):
@@ -105,15 +127,14 @@ def test_changed_source_hash_sorts_to_head(tmp_path):
     _write_round(tmp_path, 99, {n: _green() for n in names})
     state = {"entries": {}}
     for n in names:
-        h = suite._entry_hash(n)
+        h = adapter._entry_hash(n)
         if n == victim:
             h = "0" * 64  # pretend the source changed since the green row
         state["entries"][n] = {"hash": h, "green_round": 99}
     (tmp_path / "SUITE_STATE.json").write_text(json.dumps(state))
 
-    stale = suite._stale_names(tmp_path)
-    assert stale == {victim}
-    ordered = suite._ordered_names(tmp_path)
+    assert _urgent(tmp_path) == {victim}
+    ordered = adapter._ordered_names(tmp_path)
     assert ordered[0] == victim, "touched entry must re-verify the same round"
 
 
@@ -125,15 +146,16 @@ def test_missing_state_file_means_no_stale_entries(tmp_path):
     suite._load_all()
     names = list(suite.QUERIES)
     _write_round(tmp_path, 99, {n: _green() for n in names})
-    assert suite._stale_names(tmp_path) == set()
+    assert _urgent(tmp_path) == set()
     # every green entry rotates to the tail; nothing is urgent
-    assert suite._ordered_names(tmp_path) == suite._ordered_names(tmp_path)
+    assert adapter._ordered_names(tmp_path) == adapter._ordered_names(tmp_path)
 
 
 def test_latest_correctness_reader_picks_highest_round_green_only(tmp_path):
     _write_round(tmp_path, 1, {"a": _green(), "b": _green()})
     _write_round(tmp_path, 12, {"a": _green(), "b": _red(hash_match=False)})
-    assert suite._latest_correctness_names(tmp_path) == {"a"}
+    assert _latest_green(tmp_path) == {"a"}
+    assert adapter._driver_rows(tmp_path) == {"a": (12, True), "b": (12, False)}
 
 
 def test_every_entry_checked_within_bounded_rounds():
@@ -141,7 +163,7 @@ def test_every_entry_checked_within_bounded_rounds():
     row at least every ceil(N/W)-th round (urgent entries every round).
     Pin N so the backlog bound stays at three rounds max — past 150 the
     window would need renegotiating with the driver."""
-    names = suite._ordered_names()
+    names = adapter._ordered_names()
     assert len(names) <= 150, "suite grew past 3x the driver window"
 
 
@@ -153,10 +175,7 @@ def test_suite_state_covers_green_entries():
     (ritual ran for the latest round — then every green entry must be
     tracked) or 1 (normal round boundary); fail only when the gap is
     >= 2, i.e. the ritual was actually forgotten for a full round."""
-    from pathlib import Path
-
-    root = Path(suite.__file__).resolve().parent.parent
-    gap = suite._suite_state_gap()
+    gap = adapter._suite_state_gap()
     if gap is None:
         return  # fresh checkout, nothing to track yet
     assert gap <= 1, (
@@ -164,8 +183,8 @@ def test_suite_state_covers_green_entries():
         "— run tools/update_suite_state.py (round-start ritual forgotten)"
     )
     if gap == 0:
-        green = suite._latest_correctness_names()
-        state = json.loads((root / "SUITE_STATE.json").read_text())["entries"]
+        green = _latest_green()
+        state = json.loads((adapter.ROOT / "SUITE_STATE.json").read_text())["entries"]
         for n in green or ():
             assert n in state, (
                 f"{n} green but untracked — run tools/update_suite_state.py"
@@ -181,42 +200,44 @@ def test_state_gap_tolerates_driver_file_newer_than_state(tmp_path):
     _write_round(tmp_path, 6, {n: _green() for n in names})
     state = {"entries": {n: {"hash": "h", "green_round": 6} for n in names}}
     (tmp_path / "SUITE_STATE.json").write_text(json.dumps(state))
-    assert suite._suite_state_gap(tmp_path) == 0
+    assert adapter._suite_state_gap(tmp_path) == 0
 
     _write_round(tmp_path, 7, {n: _green() for n in names})
-    assert suite._suite_state_gap(tmp_path) == 1  # boundary state: OK
+    assert adapter._suite_state_gap(tmp_path) == 1  # boundary state: OK
 
     _write_round(tmp_path, 8, {n: _green() for n in names})
-    assert suite._suite_state_gap(tmp_path) == 2  # ritual forgotten: fail
+    assert adapter._suite_state_gap(tmp_path) == 2  # ritual forgotten: fail
 
-    assert suite._suite_state_gap(tmp_path / "nowhere") is None
+    assert adapter._suite_state_gap(tmp_path / "nowhere") is None
 
 
 def test_backlog_orders_oldest_green_round_first(tmp_path):
     """When the green-before backlog exceeds the driver window, the
-    most-stale attestations (oldest green_round in SUITE_STATE.json)
-    must sort first so they cannot slip a second round (VERDICT r6
-    item 2)."""
+    most-stale attestations (oldest green round) must sort first so they
+    cannot slip a second round (VERDICT r6 item 2). The backlog — green
+    in an old round, absent from the latest file — sorts after the
+    urgent entries and before last round's greens."""
     suite._load_all()
     names = list(suite.QUERIES)
-    # latest round: only the first 5 entries green -> the rest backlog
-    fresh, backlog = names[:5], names[5:]
+    # latest round: one red entry and 4 greens -> the rest backlog
+    red, fresh, backlog = names[0], names[1:5], names[5:]
     _write_round(tmp_path, 5, {n: _green() for n in names})  # all ever-checked
-    _write_round(tmp_path, 9, {n: _green() for n in fresh})
-    entries = {n: {"hash": suite._entry_hash(n), "green_round": 9} for n in fresh}
     # alternate old/new green rounds across the backlog
-    for i, n in enumerate(backlog):
-        entries[n] = {
-            "hash": suite._entry_hash(n),
-            "green_round": 7 if i % 2 == 0 else 8,
-        }
-    (tmp_path / "SUITE_STATE.json").write_text(json.dumps(entries and {"entries": entries}))
+    _write_round(tmp_path, 7, {n: _green() for n in backlog[::2]})
+    _write_round(tmp_path, 8, {n: _green() for n in backlog[1::2]})
+    _write_round(tmp_path, 9, {red: _red(hash_match=False), **{n: _green() for n in fresh}})
+    rows = adapter._driver_rows(tmp_path)
+    entries = {n: {"hash": adapter._entry_hash(n), "green_round": rows[n][0]} for n in names[1:]}
+    (tmp_path / "SUITE_STATE.json").write_text(json.dumps({"entries": entries}))
 
-    ordered = suite._ordered_names(tmp_path)
-    rounds = suite._recorded_green_rounds(tmp_path)
+    ordered = adapter._ordered_names(tmp_path)
     backlog_ordered = [n for n in ordered if n in set(backlog)]
-    seq = [rounds[n] for n in backlog_ordered]
+    seq = [rows[n][0] for n in backlog_ordered]
     assert seq == sorted(seq), "backlog must be oldest-green-round first"
+    assert set(seq) == {7, 8}
+    assert ordered[0] == red
+    assert set(ordered[1 : 1 + len(backlog)]) == set(backlog)
+    assert ordered[1 + len(backlog) :] == fresh
 
 
 def test_operator_edit_stales_delegating_entries(tmp_path):
@@ -230,18 +251,18 @@ def test_operator_edit_stales_delegating_entries(tmp_path):
 
     name = "q142_ks_drift"
     assert name in suite.QUERIES
-    before = suite._entry_hash(name)
+    before = adapter._entry_hash(name)
     key = experiment.__file__
-    orig = dict(suite._MODULE_FILE_HASHES)
+    orig = dict(adapter._MODULE_FILE_HASHES)
     try:
-        assert key in suite._MODULE_FILE_HASHES, (
+        assert key in adapter._MODULE_FILE_HASHES, (
             "entry hash never touched the operator module file"
         )
-        suite._MODULE_FILE_HASHES[key] = "simulated-edit"
-        after = suite._entry_hash(name)
+        adapter._MODULE_FILE_HASHES[key] = "simulated-edit"
+        after = adapter._entry_hash(name)
     finally:
-        suite._MODULE_FILE_HASHES.clear()
-        suite._MODULE_FILE_HASHES.update(orig)
+        adapter._MODULE_FILE_HASHES.clear()
+        adapter._MODULE_FILE_HASHES.update(orig)
     assert before != after, "operator-module edit must change the entry hash"
 
 
@@ -250,7 +271,6 @@ def test_lambda_only_reference_reaches_helper(tmp_path):
     lambda/comprehension compiles into a child code object; name
     collection must recurse into ``co_consts`` so the helper's source
     still feeds the entry hash."""
-    from ironman_medallion_lakehouse_spark import suite as s
     from ironman_medallion_lakehouse_spark.operators import experiment
 
     glb = {"experiment": experiment, "sorted": sorted}
@@ -263,8 +283,8 @@ def test_lambda_only_reference_reaches_helper(tmp_path):
         glb,
         ns,
     )
-    parts_lambda = s._transitive_source_parts(ns["eng_lambda"])
-    parts_none = s._transitive_source_parts(ns["eng_none"])
+    parts_lambda = adapter._transitive_source_parts(ns["eng_lambda"])
+    parts_none = adapter._transitive_source_parts(ns["eng_none"])
     assert any("operators.experiment=" in p for p in parts_lambda), (
         "engine module referenced only inside a lambda must contribute its file hash"
     )
@@ -274,13 +294,39 @@ def test_lambda_only_reference_reaches_helper(tmp_path):
 def test_backfilled_unknown_hash_counts_as_stale(tmp_path):
     """ADVICE r6 item 2: a rotated-out entry backfilled with an unknown
     verified-hash (``hash: null``) must be treated as stale → urgent,
-    never as silently verified."""
+    never as silently verified. Its old green row keeps it from being
+    urgent for any other reason."""
     suite._load_all()
     names = list(suite.QUERIES)
     victim = names[0]
+    _write_round(tmp_path, 3, {victim: _green()})
     _write_round(tmp_path, 9, {n: _green() for n in names[1:]})
-    entries = {n: {"hash": suite._entry_hash(n), "green_round": 9} for n in names[1:]}
+    entries = {n: {"hash": adapter._entry_hash(n), "green_round": 9} for n in names[1:]}
     entries[victim] = {"hash": None, "green_round": 3}
     (tmp_path / "SUITE_STATE.json").write_text(json.dumps({"entries": entries}))
-    assert victim in suite._stale_names(tmp_path)
-    assert suite._ordered_names(tmp_path)[0] == victim
+    assert victim in _urgent(tmp_path)
+    assert adapter._ordered_names(tmp_path)[0] == victim
+
+
+def test_engine_suite_order_reads_no_driver_file(monkeypatch):
+    """The engine's accessors are registration order with no file IO:
+    bench, tools and tests call them and never use the driver's order."""
+
+    def _no_io(*args, **kwargs):
+        raise AssertionError("suite accessor touched the file system")
+
+    monkeypatch.setattr(pathlib.Path, "read_text", _no_io)
+    monkeypatch.setattr(pathlib.Path, "glob", _no_io)
+    suite._load_all()
+    assert list(suite.queries()) == list(suite.QUERIES)
+    assert list(suite.oracle_sql()) == [
+        n for n, q in suite.QUERIES.items() if q.oracle is not None
+    ]
+
+
+def test_engine_package_names_no_driver_file():
+    pkg = pathlib.Path(suite.__file__).resolve().parent
+    for f in pkg.rglob("*.py"):
+        text = f.read_text()
+        for token in ("CORRECTNESS_", "SUITE_STATE"):
+            assert token not in text, f"{f.relative_to(pkg.parent)} names {token}"

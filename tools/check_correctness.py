@@ -9,7 +9,8 @@ differently from Spark's int64 even when values match — VERDICT r1),
 so dtype divergence is a hard FAIL here, making this checker
 stricter-or-equal to the driver's hash.
 
-Usage: python tools/check_correctness.py [query_name ...]
+Usage: python tools/check_correctness.py [--sf DIR] [query_name ...]
+(from any directory).
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ironman_medallion_lakehouse_spark import suite  # noqa: E402
 from ironman_medallion_lakehouse_spark.session import get_spark  # noqa: E402
@@ -123,6 +125,12 @@ def main() -> int:
         SF_DIR = args[i + 1]
         args = args[:i] + args[i + 2 :]
     only = set(args)
+    # Spark's Python data-source workers (q81's streaming source) import
+    # the package with the driver JVM's environment, which the session's
+    # addPyFile does not reach: the JVM inherits PYTHONPATH from here.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(app_name="check-correctness")
     con = duckdb.connect()
     for t in TABLES:
